@@ -38,7 +38,7 @@ object Components {
     * persisted for the caller's query. */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
       maxRounds: Int = 50): (DataFrame, Int) = {
-    val rot = new graft.ops.CheckpointRotation(pairs.sparkSession.sparkContext)
+    val rot = new graft.ops.CheckpointRotation
     var edges = rot.rotate(pairs
       .select(greatest(col(aCol), col(bCol)).as("u"),
         least(col(aCol), col(bCol)).as("v"))
@@ -227,27 +227,13 @@ object Components {
     // constraint chains both sides would otherwise carry (dangling
     // internal attr refs → NoSuchElementException during optimize);
     // the checkpoint (tiny: blast-radius-sized, and the closure loop
-    // already materialized it) truncates them. Skipped when the
+    // already materialized it) truncates them. A no-op when the
     // adaptive fast path already returned a LocalRelation (r14).
-    val relabeled = checkpointUnlessLocal(adaptiveComponents(sub, "u", "v"))
+    val relabeled = adaptiveComponents(sub, "u", "v").lockedCheckpoint()
     val untouched = stored.join(touched,
       stored("component_id") === touched("__root"), "left_anti")
     untouched.select("id", "component_id").unionByName(relabeled)
   }
-
-  /** lockedCheckpoint, SKIPPED when the frame is already a driver-local
-    * LocalRelation — the [[adaptiveComponents]] fast path's output. A
-    * checkpoint there costs a full materialization job and buys
-    * nothing: a LocalRelation has no lineage to truncate and no
-    * union-constraint chains for Catalyst to mishandle (the reasons
-    * the checkpoint exists on the distributed path). */
-  private[dedup] def checkpointUnlessLocal(df: DataFrame): DataFrame =
-    df.queryExecution.logical match {
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => df
-      case _ =>
-        import graft.ops.CheckpointRotation.Ops
-        df.lockedCheckpoint()
-    }
 
   /** (count, xor-of-row-hashes) — an order-independent edge-set
     * fingerprint; equal fingerprints on consecutive rounds = fixpoint.

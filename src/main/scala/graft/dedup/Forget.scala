@@ -110,10 +110,10 @@ object Forget {
       .join(survivors.select(col("id").as("u")), Seq("u"), "left_semi")
       .join(survivors.select(col("id").as("v")), Seq("v"), "left_semi")
     // blast-radius-sized; checkpointed for the same Catalyst
-    // union-constraint reasons as incrementalComponents (skipped on
+    // union-constraint reasons as incrementalComponents (a no-op on
     // the LocalRelation fast path — nothing to truncate, r14)
-    val relabeled = Components.checkpointUnlessLocal(
-      Components.adaptiveComponents(pSub, "u", "v"))
+    val relabeled = Components.adaptiveComponents(pSub, "u", "v")
+      .lockedCheckpoint()
     untouched.select("id", "component_id").unionByName(relabeled)
   }
 }

@@ -17,7 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Motivation is the measured 4× regex cliff: a JVM `split` on the
   * à-ÿ-extended class loses the ASCII fast path (26.6 s vs 6.9 s for
-  * the same sf1 corpus scan — LmProbe3's A/B), and tokenization is the
+  * the same sf1 corpus scan, one-off A/B), and tokenization is the
   * inner loop of every text operator (OOV, TF-IDF, familiarity,
   * repetition, chunking, BPE) — at 100 TB the split IS the scan cost.
   * The kernel pays neither the regex nor the HOF filter: token slices

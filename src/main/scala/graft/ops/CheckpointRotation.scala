@@ -1,96 +1,62 @@
 package graft.ops
 
-import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Superseded-checkpoint rotation for iterative loops: each round's
-  * eager localCheckpoint replaces the previous round's, so at most two
+  * eager checkpoint replaces the previous round's, so at most two
   * snapshots are ever live (on a 10^11-edge component graph, retaining
   * all ~15 rounds would pin 15 O(E) copies on the executors).
   *
-  * The new checkpoint is materialized FIRST, then the superseded one is
-  * released. Ownership is tracked by diffing the registry of
-  * CHECKPOINTED RDD ids around the checkpoint call — filtering on
-  * `isCheckpointed` (true only once a checkpoint has materialized,
-  * never for a plain persist) so a caller's lazy `persist` whose first
-  * materialization happens to run inside our checkpoint job can never
-  * be captured and mis-released.
-  *
-  * Contract: the diff is unambiguous only when exactly ONE checkpoint
-  * materializes inside the rotate call. This library only ever creates
-  * EAGER checkpoints (no `localCheckpoint(false)` anywhere), so a
-  * checkpoint can never materialize lazily inside someone else's rotate
-  * job. Rotations (and [[CheckpointRotation.checkpoint]] users)
-  * serialize on a shared lock, so two rotating loops in concurrent
-  * queries cannot interleave their registry diffs; any OTHER concurrent
-  * eager checkpoint that lands inside the diff window — or a caller's
-  * lazy checkpoint upstream of the rotated frame — makes the diff
-  * ambiguous, and `rotate` then adopts NOTHING from that round (the
-  * superseded snapshot is retained until the session state drop, the
-  * pre-rotation behavior) rather than risk releasing a frame another
-  * query still needs. Ambiguity can only degrade retention, never
-  * correctness.
+  * Ownership rule: a checkpoint is owned through its own RDD handle,
+  * the `LogicalRDD` leaf the checkpointed frame reads. A rotation
+  * materializes the new checkpoint first, then unpersists the handle it
+  * kept from the previous round — never anything it did not create, so
+  * concurrent checkpoints elsewhere in the session are untouched. A
+  * rotation's state is confined to the one loop that created it.
   */
-final class CheckpointRotation(sc: SparkContext) {
+final class CheckpointRotation {
 
-  private def ckptIds: Set[Int] =
-    sc.getPersistentRDDs.filter(_._2.isCheckpointed).keySet.toSet
-
-  private var own: Set[Int] = Set.empty
+  private var own: Option[RDD[_]] = None
 
   /** Eagerly checkpoint `df`, then release the previously rotated
     * checkpoint (if any). Returns the checkpointed frame. */
-  def rotate(df: DataFrame): DataFrame = CheckpointRotation.lock.synchronized {
-    val before = ckptIds
-    val out = df.localCheckpoint(true)
-    val fresh = ckptIds -- before
-    if (fresh.size == 1) {
-      own.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-      own = fresh
-    } else {
-      // ambiguous diff (a foreign checkpoint landed in the window):
-      // adopt nothing NEW — but the previously adopted snapshot is
-      // provably ours and provably superseded (`out` is materialized),
-      // so release it; only this round's snapshot is retained until
-      // the session state drop instead of risking a foreign release
-      System.err.println(s"[graft] CheckpointRotation: ambiguous ownership " +
-        s"(${fresh.size} new checkpoints in one rotate) — retaining this round")
-      own.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-      own = Set.empty
+  def rotate(df: DataFrame): DataFrame = {
+    val out = CheckpointRotation.checkpoint(df)
+    release()
+    own = out.queryExecution.logical match {
+      case l: LogicalRDD => Some(l.rdd)
+      case _ => None
     }
     out
   }
 
   /** Release the currently retained checkpoint (end-of-loop cleanup for
     * callers that copy the final frame out of the rotation). */
-  def release(): Unit = CheckpointRotation.lock.synchronized {
-    own.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-    own = Set.empty
+  def release(): Unit = {
+    own.foreach(_.unpersist(blocking = false))
+    own = None
   }
 }
 
 object CheckpointRotation {
-  /** All eager checkpoints in this library serialize on this lock, so a
-    * concurrent query's checkpoint can never materialize inside another
-    * rotation's registry diff. Only checkpoint MATERIALIZATION is
-    * serialized — the expensive upstream computation of a rotated frame
-    * runs inside the same job, so contention is real only when two
-    * queries checkpoint simultaneously, which this engine's
-    * one-query-at-a-time model makes rare. */
-  private[graft] val lock = new Object
+  /** The one eager stage barrier: materialize `df` now and return a
+    * frame whose plan is a `LogicalRDD` leaf over the checkpointed
+    * rows, cutting the lineage above it. A bare `LocalRelation` is
+    * returned unchanged with no job run: it has no lineage to cut. */
+  def checkpoint(df: DataFrame): DataFrame = df.queryExecution.logical match {
+    case _: LocalRelation => df
+    case _ => df.localCheckpoint(true)
+  }
 
-  /** Shared-lock eager checkpoint for one-shot (non-rotating) uses.
-    * Every library checkpoint site routes through here (suffix form
-    * below), which is what makes the serialization contract above
-    * actually hold — a direct `df.localCheckpoint()` in concurrent
-    * code would land inside a rotation's diff window and force its
-    * retain-everything ambiguous path. */
-  def checkpoint(df: DataFrame): DataFrame =
-    lock.synchronized(df.localCheckpoint(true))
-
-  /** Suffix form of [[checkpoint]]: `df.lockedCheckpoint()` via
+  /** Suffix form of [[checkpoint]], via
     * `import graft.ops.CheckpointRotation.Ops`. */
   implicit final class Ops(private val df: DataFrame) extends AnyVal {
+    /** [[checkpoint]] this frame: an eager `LogicalRDD` barrier, or the
+      * frame itself when it is a bare `LocalRelation`. Takes no lock;
+      * the name is kept for existing callers. */
     def lockedCheckpoint(): DataFrame = checkpoint(df)
   }
 }

@@ -171,7 +171,7 @@ object ExactPercentiles {
     // through a rotation so the refinement path can RELEASE it — the
     // refined state is independently checkpointed, and only one state
     // checkpoint should survive the call.
-    val screenRot = new graft.ops.CheckpointRotation(present.sparkSession.sparkContext)
+    val screenRot = new graft.ops.CheckpointRotation
     val state = screenRot.rotate(lazyState)
     val naMax = state.agg(max(col("__na"))).collect()
       .headOption.flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
@@ -212,7 +212,7 @@ object ExactPercentiles {
       maxRounds: Int = 8): DataFrame = {
     val gs = groupCols.map(g => col(s"`$g`"))
     // superseded-checkpoint rotation: ≤ 2 state snapshots ever live
-    val rot = new graft.ops.CheckpointRotation(hist.sparkSession.sparkContext)
+    val rot = new graft.ops.CheckpointRotation
     var state = rot.rotate(state0)
     var round = 0
     while (round < maxRounds) {

@@ -475,20 +475,6 @@ object Profiler {
       columns)
   }
 
-  /** [[profileManyCached]] with [[profileManyAuto]]'s exact/sketch
-    * switch. */
-  def profileManyAutoCached(tables: Seq[(String, DataFrame)],
-      exactThreshold: Long = 200000L,
-      features: Set[String] = AllFeatures,
-      columns: Seq[String] = Nil): DataFrame = {
-    val n = if (exactnessMatters(features))
-      Some(tables.map(t => cheapCount(t._2)).max) else None
-    val exact = n.forall(_ <= exactThreshold)
-    profileManyCached(tables,
-      ProfilerConfig(exact = exact, features = features, maxGroupRows = n),
-      columns)
-  }
-
   // ---- incremental (mergeable) profiling --------------------------------
 
   /** Mergeable profile STATE of one data increment: the exact value

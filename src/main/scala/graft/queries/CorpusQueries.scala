@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.dedup.{Components, Decontamination, Dedup}
+import graft.ops.CheckpointRotation.Ops
 import graft.text.{Chunking, Packing, Sampling, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -705,7 +706,7 @@ object CorpusQueries {
         when(col("doc_id") % 41 === 0,
           TextQueries.Scripts.toUntracked(col("text2")))
           .otherwise(col("text2")).as("text2"))
-      .localCheckpoint(true)
+      .lockedCheckpoint()
     val doubled = base
       .unionByName(base.select((col("doc_id") + 1000000L).as("doc_id"),
         col("text2")))

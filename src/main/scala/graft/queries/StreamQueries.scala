@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.ops.CheckpointRotation.Ops
 import graft.streaming.StreamingQuality
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -28,7 +29,7 @@ object StreamQueries {
     * 10.75 · 2¹⁰ · 2¹⁶) — the planted w13 corpus is clipped/
     * concatenated text and its en training slice is small, so scores
     * sit ~1.5 bits above w14's raw-document gate; probed at the gate SF
-    * (W13LmProbe: en p90 10.73 vs de/es/fr/zh p50 ≈ 10.9), this keeps
+    * (en p90 10.73 vs de/es/fr/zh p50 ≈ 10.9), this keeps
     * ~90% of the trusted language and rejects most of the rest. */
   private val Lm13Thresh = 721420288L
   /** w15's script-aware LSH shingle size (word 5-grams for worded
@@ -505,15 +506,15 @@ object StreamQueries {
   private[graft] def w13Control(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, Seq[Long], (Seq[Long], Seq[Long]), DataFrame) = {
     val planted = w13Planted(Tables.load(spark, dir, "documents"))
-    val blocked = w13BlockedFrame(planted).localCheckpoint(true)
-    val cleaned = w13CleanedFrame(planted, blocked).localCheckpoint(true)
-    val refBuckets = w13RefBucketsFrame(cleaned).localCheckpoint(true)
+    val blocked = w13BlockedFrame(planted).lockedCheckpoint()
+    val cleaned = w13CleanedFrame(planted, blocked).lockedCheckpoint()
+    val refBuckets = w13RefBucketsFrame(cleaned).lockedCheckpoint()
     val dense = w13DenseWeights(cleaned)
     val (lmC2, lmC1) = w13LmCounts(cleaned)
     val lm = graft.text.LanguageModel.denseCounts(lmC2, lmC1, LmB2, LmB1)
     val gated = w13Gated(cleaned, refBuckets, dense, lm)
     val counts = gated.groupBy("lang").agg(count(lit(1)).as("__n"))
-    val probs = sqrtMinProbs(counts, "lang").localCheckpoint(true)
+    val probs = sqrtMinProbs(counts, "lang").lockedCheckpoint()
     (blocked, refBuckets, dense, lm, probs)
   }
 
@@ -601,16 +602,16 @@ object StreamQueries {
     // but OVERLAP on driver threads instead of running nose to tail.
     // Every trained table is the SAME frame definition w13Control uses.
     val blocked = w13BlockedFrame(planted)
-    val cleaned = w13CleanedFrame(planted, blocked).localCheckpoint(true)
+    val cleaned = w13CleanedFrame(planted, blocked).lockedCheckpoint()
     val (lmC2, lmC1) = w13LmCounts(cleaned)
     val (refBuckets, dense, lm) = graft.ops.Overlap.par3(
-      () => w13RefBucketsFrame(cleaned).localCheckpoint(true),
+      () => w13RefBucketsFrame(cleaned).lockedCheckpoint(),
       () => w13DenseWeights(cleaned),
       () => graft.text.LanguageModel.denseCounts(lmC2, lmC1, LmB2, LmB1))
     val gated = graft.ops.StagePersists.track(
       w13Gated(cleaned, refBuckets, dense, lm))
     val counts = gated.groupBy("lang").agg(count(lit(1)).as("__n"))
-    val probs = sqrtMinProbs(counts, "lang").localCheckpoint(true)
+    val probs = sqrtMinProbs(counts, "lang").lockedCheckpoint()
     val sampled = graft.text.Sampling.weightedSample(gated, "lang", "doc_id",
       probs)
     val chunks = graft.text.Chunking.tokenChunks(sampled, "doc_id", "text",
@@ -886,7 +887,7 @@ object StreamQueries {
           floor(length(col("text2")) * 0.8).cast("int")).as("text2")))
 
   private[graft] def w15Planted(docs: DataFrame): DataFrame =
-    w15PlantedFrom(w15Base(docs).localCheckpoint(true))
+    w15PlantedFrom(w15Base(docs).lockedCheckpoint())
 
   /** Batch-trained control plane: (corpus content hashes, script LSH
     * corpus buckets, per-script dense LM arrays, per-script LM cut
@@ -920,10 +921,10 @@ object StreamQueries {
     val docs = Tables.load(spark, dir, "documents")
     // materialized once: a pushdown barrier (see w15PlantedFrom) AND
     // the shared input of every control table below
-    val base = w15Base(docs).localCheckpoint(true)
+    val base = w15Base(docs).lockedCheckpoint()
     val corpus = base.filter(col("doc_id") % 3 === 0)
-    val hashes = w15HashesFrame(corpus).localCheckpoint(true)
-    val refBuckets = w15RefBucketsFrame(corpus).localCheckpoint(true)
+    val hashes = w15HashesFrame(corpus).lockedCheckpoint()
+    val refBuckets = w15RefBucketsFrame(corpus).lockedCheckpoint()
     val (c2, c1) = w15LmCounts(corpus)
     val lm = ScriptLm.denseCounts(c2, c1, TextQueries.SLmB2, TextQueries.SLmB1)
     val cuts = ScriptLm.percentileCuts(
@@ -934,7 +935,7 @@ object StreamQueries {
       .sortBy(_._1)
     val gated = w15Gated(w15PlantedFrom(base), hashes, refBuckets, lm, cuts)
     val counts = gated.groupBy("script").agg(count(lit(1)).as("__n"))
-    val probs = sqrtMinProbs(counts, "script").localCheckpoint(true)
+    val probs = sqrtMinProbs(counts, "script").lockedCheckpoint()
     (hashes, refBuckets, lm, cuts, probs)
   }
 
@@ -1002,7 +1003,7 @@ object StreamQueries {
     // path (StreamingSpec) still goes through w15Control + w15Chain.
     import graft.text.ScriptLm
     val docs = Tables.load(spark, dir, "documents")
-    val base = w15Base(docs).localCheckpoint(true)
+    val base = w15Base(docs).lockedCheckpoint()
     val corpus = base.filter(col("doc_id") % 3 === 0)
     // r14 barrier surgery (guide §2.6): the r13 twin trained hashes,
     // refBuckets, the dense LM and the percentile cuts as FOUR serial
@@ -1015,7 +1016,7 @@ object StreamQueries {
     val hashes = w15HashesFrame(corpus)
     val (c2, c1) = w15LmCounts(corpus)
     val (refBuckets, lm) = graft.ops.Overlap.par2(
-      () => w15RefBucketsFrame(corpus).localCheckpoint(true),
+      () => w15RefBucketsFrame(corpus).lockedCheckpoint(),
       () => ScriptLm.denseCounts(c2, c1, TextQueries.SLmB2, TextQueries.SLmB1))
     // the percentile cuts train on the corpus scored in the dense
     // kernel form (r14; pinned ≡ the score() join form per row, so the
@@ -1044,7 +1045,7 @@ object StreamQueries {
     // broadcast cross (the documented totals pattern) must not ride
     // into the data-plane plan, where the blanket no-BNLJ plan-shape
     // pin (ScaleSpec) would flag it
-    val probs = sqrtMinProbs(counts, "script").localCheckpoint(true)
+    val probs = sqrtMinProbs(counts, "script").lockedCheckpoint()
     val sampled = graft.text.Sampling.weightedSample(gated, "script",
       "doc_id", probs)
     val chunks = graft.text.Chunking.tokenChunks(sampled, "doc_id", "text2",

@@ -214,8 +214,7 @@ object BpeTrainer {
   def trainMerges(df: DataFrame, textCol: String, numMerges: Int,
       minFreq: Long = 2L): Seq[(Int, String, String, Long)] = {
     require(numMerges >= 1, "need at least one merge")
-    val sc = df.sparkSession.sparkContext
-    val rot = new graft.ops.CheckpointRotation(sc)
+    val rot = new graft.ops.CheckpointRotation
     var state = rot.rotate(df
       .select(explode(words(col(s"`$textCol`"))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("n"))

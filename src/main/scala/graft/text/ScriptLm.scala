@@ -254,14 +254,6 @@ object ScriptLm {
       .otherwise(LanguageModel.avgKey(nllFp, nGrams) <= thr)
   }
 
-  /** [[gateKept]]'s cut dispatch as a SQL CASE over a `script`
-    * column — shared with the w15 mirror so both engines compare
-    * against the same literals. */
-  def gateCutSql(cuts: Seq[(String, Long)]): String =
-    if (cuts.isEmpty) Long.MaxValue.toString
-    else "CASE script " + cuts.map { case (s, t) => s"WHEN '$s' THEN $t" }
-      .mkString(" ") + s" ELSE ${Long.MaxValue} END"
-
   /** (script, n_grams, nll_fp, lm_scorable) as PURE COLUMNS over a
     * text column — no shuffle, no state, stream-legal (the w15 gate).
     * The script vote and token array are codegen'd builtin regex

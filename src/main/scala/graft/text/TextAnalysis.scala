@@ -346,7 +346,7 @@ object TextAnalysis {
     // its accumulator and the element (an outer reference to g3 inside
     // a lambda would re-embed — and re-sort — the whole expression per
     // element, the CollapseProject trap Importance.withGramArray pins)
-    val zero = struct(lit(" ").as("prev"), lit(0L).as("run"),
+    val zero = struct(lit("\u0000").as("prev"), lit(0L).as("run"),
       lit(0L).as("dup"), lit(0L).as("total"))
     val dup = aggregate(g3, zero,
       (acc, x) => struct(x.as("prev"),

@@ -30,6 +30,28 @@ class ClusterMatchSpec extends SparkSpec {
     assert(links == Seq((1L, 2L, 0.94)))
   }
 
+  test("clusterStats: exact per-cluster mean/min/max/std on a hand-built profile") {
+    // dyadic feature values, two members or one per cluster: every
+    // mean and population std is exact in binary floating point
+    val profiles = Seq(
+      ("t1", "a", 0.0, 2.0), ("t1", "b", 0.5, 4.0), // cluster 0
+      ("t2", "c", 0.125, 6.0),                      // cluster 1 (singleton)
+      ("t2", "z", 1.0, 100.0))                      // unassigned: absent
+      .toDF("table", "column", "null_ratio", "avg_len")
+    val assignments = Seq("t1::a" -> 0, "t1::b" -> 0, "t2::c" -> 1)
+      .toDF("column_id", "cluster_id")
+    val got = Clustering.clusterStats(profiles, assignments,
+        features = Seq("null_ratio", "avg_len"))
+      .select("cluster_id", "n_columns",
+        "null_ratio_mean", "null_ratio_min", "null_ratio_max", "null_ratio_std",
+        "avg_len_mean", "avg_len_min", "avg_len_max", "avg_len_std")
+      .as[(Int, Long, Double, Double, Double, Double, Double, Double, Double, Double)]
+      .collect().toSet
+    assert(got == Set(
+      (0, 2L, 0.25, 0.0, 0.5, 0.25, 3.0, 2.0, 4.0, 1.0),
+      (1, 1L, 0.125, 0.125, 0.125, 0.0, 6.0, 6.0, 6.0, 0.0)))
+  }
+
   test("dbscan separates dense groups and flags noise") {
     val pts = Seq(
       "a1" -> Array(0.0, 0.0), "a2" -> Array(0.1, 0.0), "a3" -> Array(0.0, 0.1),

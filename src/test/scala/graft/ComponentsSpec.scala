@@ -15,11 +15,11 @@ class ComponentsSpec extends SparkSpec {
     assert(got == (0L to 19L).map(_ -> 0L).toMap)
   }
 
-  test("concurrent rotating loops stay correct (shared-lock rotation)") {
-    // Two multi-round CC queries on separate threads: their checkpoint
-    // rotations serialize on the shared lock, so neither can adopt (and
-    // later release) the other's round snapshot. Both must converge to
-    // the exact labelling.
+  test("concurrent rotating loops stay correct (handle-owned rotation)") {
+    // Two multi-round CC queries on separate threads: each rotation
+    // releases only the checkpoint RDD it created, so neither can
+    // release the other's round snapshot. Both must converge to the
+    // exact labelling.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -65,6 +65,92 @@ class ComponentsSpec extends SparkSpec {
     // and the labelling built on the surviving checkpoint is intact
     assert(labels.as[(Long, Long)].collect().toMap ==
       (0L to 39L).map(_ -> 0L).toMap)
+  }
+
+  test("a rotating loop releases only its own snapshots under foreign checkpoints") {
+    // Another thread issues eager checkpoints of its own while the
+    // multi-round loop rotates. The loop owns each round through that
+    // checkpoint's RDD handle, so every foreign checkpoint must still
+    // be persisted afterwards, and of the loop's own snapshots at most
+    // the fixpoint is retained.
+    import graft.ops.CheckpointRotation.Ops
+    import org.apache.spark.sql.execution.LogicalRDD
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    def rddId(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.logical match { case l: LogicalRDD => l.rdd.id }
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    val looping = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val firstForeign = new java.util.concurrent.CountDownLatch(1)
+    // the foreign frames stay referenced, as a live query's would: an
+    // unreachable checkpoint is fair game for the context cleaner
+    val foreign = Future {
+      val frames = Seq.newBuilder[org.apache.spark.sql.DataFrame]
+      var n = 0
+      while (looping.get || n < 3) {
+        frames += spark.range(0, 1000, 1, 2)
+          .selectExpr(s"id % ${n + 2} AS k").lockedCheckpoint()
+        firstForeign.countDown()
+        n += 1
+      }
+      frames.result()
+    }
+    assert(firstForeign.await(120, java.util.concurrent.TimeUnit.SECONDS))
+    val chain = (0L until 39L).map(i => (i, i + 1)).toDF("a", "b")
+    val (labels, rounds) =
+      try Components.connectedComponents(chain, "a", "b")
+      finally looping.set(false)
+    val foreignFrames = Await.result(foreign, 120.seconds)
+    val foreignIds = foreignFrames.map(rddId).toSet
+    assert(rounds > 1)
+    assert(labels.as[(Long, Long)].collect().toMap ==
+      (0L to 39L).map(_ -> 0L).toMap)
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    assert(foreignIds.subsetOf(persisted),
+      s"foreign checkpoints released: ${foreignIds -- persisted}")
+    val own = persisted -- foreignIds
+    assert(own.size <= 1,
+      s"${own.size} loop snapshots retained after $rounds rounds (expected ≤ 1: the fixpoint)")
+    assert(foreignFrames.head.count() == 1000)
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+  }
+
+  test("lockedCheckpoint: a bare LocalRelation passes through with no job, anything else becomes a LogicalRDD leaf") {
+    import graft.ops.CheckpointRotation.Ops
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.LogicalRDD
+    val sc = spark.sparkContext
+    val local = Seq((1L, 2L), (3L, 4L)).toDF()
+    assert(local.queryExecution.logical.isInstanceOf[LocalRelation])
+    // job starts in bus order; a marker job after the call proves none
+    // ran before it
+    val started = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = started.put(
+        Option(j.properties).flatMap(p => Option(p.getProperty("graft.spec.marker")))
+          .getOrElse("unmarked"))
+    }
+    sc.addSparkListener(listener)
+    try {
+      assert(local.lockedCheckpoint() eq local)
+      sc.setLocalProperty("graft.spec.marker", "marker")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.spec.marker", null)
+      assert(started.poll(60, java.util.concurrent.TimeUnit.SECONDS) == "marker",
+        "a job ran inside lockedCheckpoint() on a bare LocalRelation")
+    } finally sc.removeSparkListener(listener)
+
+    val ck = local.select(($"_1" + $"_2").as("s")).lockedCheckpoint()
+    ck.queryExecution.logical match {
+      case l: LogicalRDD =>
+        assert(ck.as[Long].collect().sorted.toSeq == Seq(3L, 7L))
+        assert(sc.getPersistentRDDs.contains(l.rdd.id),
+          "the LogicalRDD leaf is not the persisted checkpoint")
+        l.rdd.unpersist(blocking = true)
+      case p => fail(s"expected a LogicalRDD leaf, got ${p.nodeName}")
+    }
   }
 
   test("empty pair list yields empty labelling") {

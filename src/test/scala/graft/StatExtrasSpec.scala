@@ -40,6 +40,21 @@ class StatExtrasSpec extends SparkSpec {
     assert(capped.getAs[Long]("distinct_capped") === 25L)
   }
 
+  test("histogram outliers: rare values of peaked low-cardinality columns only") {
+    import spark.implicits._
+    def rep(column: String, value: String, n: Int) = Seq.fill(n)(column -> value)
+    val long = (
+      rep("a", "x", 39) ++ rep("a", "y", 1) ++                    // 1/40 < 5%: flagged
+      rep("d", "x", 38) ++ rep("d", "y", 1) ++ rep("d", "z", 1) ++ // two rare values
+      rep("e", "k", 19) ++ rep("e", "l", 1) ++                    // exactly 5%: kept
+      rep("b", "p", 14) ++ rep("b", "q", 5) ++ rep("b", "r", 1) ++ // top mass 0.7: not peaked
+      rep("c", "m", 200) ++ (1 to 16).flatMap(i => rep("c", s"v$i", 1)) // 17 classes
+    ).toDF("column", "value")
+    val got = DBoost.histogramOutliers(long)
+      .as[(String, String, Long)].collect().toSet
+    assert(got == Set(("a", "y", 1L), ("d", "y", 1L), ("d", "z", 1L)))
+  }
+
   test("gmm outliers flag a planted point") {
     import spark.implicits._
     val rng = new scala.util.Random(7)
